@@ -31,7 +31,9 @@ SF_DEFAULT = "/root/testdata/sf0.001"
 # scan plan only — never data or results; every execution still scans
 # the parquet inputs (the per-session file-listing cache the guide §6
 # recommends, and what a production session gets from registering the
-# tables once).
+# tables once).  Static-data contract: a handle keeps the file listing
+# it was built with, so the parquet files under ``sf_dir`` must not be
+# rewritten while a session is alive.
 _TABLES: dict[tuple[str, str, str], DataFrame] = {}
 
 
@@ -3913,12 +3915,6 @@ def stream_batch_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docvault_ocr_service_spark.streaming.stream import (
         stream_extract_merge)
 
-    # tiny fixture through many MERGE stages: a 200-partition default
-    # shuffle would add pure scheduler overhead — pin low for THIS
-    # query and restore after (unlike _t's UTC pin this is a perf
-    # tweak, not a semantic requirement for the whole session)
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 40)
     inp = docs.select(
         F.concat(F.lit("https://corpus.local/"), F.col("doc_id"))
@@ -3967,10 +3963,6 @@ def stream_batch_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
                .first())
     finally:
         shutil.rmtree(work, ignore_errors=True)
-        if prior_shuffle is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     out_schema = T.StructType([
         T.StructField("n_urls", T.LongType()),
         T.StructField("status_match", T.LongType()),

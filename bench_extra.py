@@ -9,13 +9,18 @@ Modes:
   python bench_extra.py --query NAME [NAME ...]
                                         # isolated: fresh session, warm
                                         # pass, median-of-5 per query
+                                        # (noop sink)
   python bench_extra.py --explain NAME [NAME ...]
                                         # write .explain("formatted")
                                         # for the query to stdout
-  python bench_extra.py --noop NAME     # time with the noop sink
-                                        # (computes every column)
+  python bench_extra.py --noop NAME [NAME ...]
+                                        # time with the noop sink in
+                                        # one shared session
 
-All modes print one JSON line at the end.
+``--query`` and ``--noop`` time with the noop sink, which computes
+every column (``.count()`` lets Catalyst prune UDF columns).  A mode
+flag needs at least one query name; anything else prints this usage
+and exits 1.  All modes print one JSON line at the end.
 """
 
 from __future__ import annotations
@@ -37,6 +42,10 @@ CPUS = benchmod.CPUS
 def _warm(spark) -> None:
     spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).count()
     spark.range(256).mapInPandas(lambda it: it, schema="id long").count()
+
+
+def _run_noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
 def headline_full() -> None:
@@ -63,11 +72,11 @@ def isolated(names: list[str], reps: int = 5) -> None:
         _warm(spark)
         qs = entrymod.queries()
         spark.sparkContext.setJobDescription(f"isolated:{name}")
-        qs[name](spark, SF_DIR).count()  # warm pass
+        _run_noop(qs[name](spark, SF_DIR))  # warm pass
         samples = []
         for _ in range(reps):
             t0 = time.monotonic()
-            qs[name](spark, SF_DIR).count()
+            _run_noop(qs[name](spark, SF_DIR))
             samples.append(round(time.monotonic() - t0, 3))
         spark.stop()
         out[name] = {"median": sorted(samples)[len(samples) // 2],
@@ -98,13 +107,11 @@ def noop(names: list[str], reps: int = 3) -> None:
     _warm(spark)
     qs = entrymod.queries()
     for name in names:
-        df = qs[name](spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()  # warm
+        _run_noop(qs[name](spark, SF_DIR))  # warm
         samples = []
         for _ in range(reps):
             t0 = time.monotonic()
-            qs[name](spark, SF_DIR).write.format("noop") \
-                .mode("overwrite").save()
+            _run_noop(qs[name](spark, SF_DIR))
             samples.append(round(time.monotonic() - t0, 3))
         out[name] = {"median": sorted(samples)[len(samples) // 2],
                      "samples": samples}
@@ -112,12 +119,13 @@ def noop(names: list[str], reps: int = 3) -> None:
     print(json.dumps({"mode": "noop", "queries": out}))
 
 
+_MODES = {"--query": isolated, "--explain": explain, "--noop": noop}
+
 if __name__ == "__main__":
-    if len(sys.argv) > 2 and sys.argv[1] == "--query":
-        isolated(sys.argv[2:])
-    elif len(sys.argv) > 2 and sys.argv[1] == "--explain":
-        explain(sys.argv[2:])
-    elif len(sys.argv) > 2 and sys.argv[1] == "--noop":
-        noop(sys.argv[2:])
-    else:
+    args = sys.argv[1:]
+    if not args:
         headline_full()
+    elif args[0] in _MODES and len(args) > 1:
+        _MODES[args[0]](args[1:])
+    else:
+        sys.exit(__doc__)

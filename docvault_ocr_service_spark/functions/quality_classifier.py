@@ -46,33 +46,12 @@ surface this engine adds (SURVEY §2 "beyond the reference").
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from docvault_ocr_service_spark.functions.dsir import hashed_features
 
-
-@contextmanager
-def _training_shuffles(spark, k_parts: int):
-    """Scope the GD loop's shuffle layout: partitions already derived
-    from the seed-set size, AQE off so each per-iteration collect is
-    ONE job instead of a cascade of stage-materialization jobs (~35 ms
-    of driver latency each on this box).  Safe here in a way it is not
-    in general: every cross-row sum in the loop is an exact scaled
-    integer, so partition layout cannot perturb results.  Both knobs
-    restored on exit."""
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(k_parts))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
 
 W_SCALE = 1_000_000_000      # weight resolution (1e-9)
 R_SCALE = 1_000_000          # residual resolution (1e-6)
@@ -178,41 +157,40 @@ def train_quality_classifier(labeled: DataFrame, id_col: str,
              .persist())
     try:
         weights: dict[str, int] = {BIAS_BUCKET: 0}   # bucket -> w_q
-        with _training_shuffles(spark, k_parts):
-            for _ in range(iters):
-                # pandas → Arrow: the weight table lands as JVM-side Arrow
-                # batches (no Python-worker parallelize tasks) — measured
-                # 3x faster per broadcast build than the list path
-                w_df = spark.createDataFrame(
-                    pd.DataFrame(sorted(weights.items()),
-                                 columns=["bucket", "w_q"]),
-                    schema="bucket string, w_q long")
-                # exact per-doc margin (long sum of cnt·w_q, bias included
-                # via its sentinel row)
-                margins = (pairs.join(F.broadcast(w_df), "bucket", "left")
-                           .groupBy("__id", "__label")
-                           .agg(F.sum(F.col("__cnt")
-                                      * F.coalesce("w_q", F.lit(0)))
-                                .alias("__sum_wq")))
-                resid = margins.select(
-                    "__id",
-                    ((F.col("__label") - _sigmoid(
-                        F.col("__sum_wq") / F.lit(W_SCALE)))
-                     * F.lit(R_SCALE)).cast("long").alias("__resid_q"))
-                # one bounded collect: per-bucket gradients, bias included
-                grads = (pairs.join(F.broadcast(resid), "__id")
-                         .groupBy("bucket")
-                         .agg(F.sum(F.col("__resid_q") * F.col("__cnt"))
-                              .alias("__grad_q"))
-                         .collect())
-                denom = lr_den * n_docs
-                for row in grads:
-                    num = row["__grad_q"] * lr_num * _W_OVER_R
-                    # truncating integer division == Spark `div`,
-                    # DuckDB `//` (both round toward zero)
-                    delta = abs(num) // denom * (1 if num >= 0 else -1)
-                    weights[row["bucket"]] = \
-                        weights.get(row["bucket"], 0) + delta
+        for _ in range(iters):
+            # pandas → Arrow: the weight table lands as JVM-side Arrow
+            # batches (no Python-worker parallelize tasks) — measured
+            # 3x faster per broadcast build than the list path
+            w_df = spark.createDataFrame(
+                pd.DataFrame(sorted(weights.items()),
+                             columns=["bucket", "w_q"]),
+                schema="bucket string, w_q long")
+            # exact per-doc margin (long sum of cnt·w_q, bias included
+            # via its sentinel row)
+            margins = (pairs.join(F.broadcast(w_df), "bucket", "left")
+                       .groupBy("__id", "__label")
+                       .agg(F.sum(F.col("__cnt")
+                                  * F.coalesce("w_q", F.lit(0)))
+                            .alias("__sum_wq")))
+            resid = margins.select(
+                "__id",
+                ((F.col("__label") - _sigmoid(
+                    F.col("__sum_wq") / F.lit(W_SCALE)))
+                 * F.lit(R_SCALE)).cast("long").alias("__resid_q"))
+            # one bounded collect: per-bucket gradients, bias included
+            grads = (pairs.join(F.broadcast(resid), "__id")
+                     .groupBy("bucket")
+                     .agg(F.sum(F.col("__resid_q") * F.col("__cnt"))
+                          .alias("__grad_q"))
+                     .collect())
+            denom = lr_den * n_docs
+            for row in grads:
+                num = row["__grad_q"] * lr_num * _W_OVER_R
+                # truncating integer division == Spark `div`,
+                # DuckDB `//` (both round toward zero)
+                delta = abs(num) // denom * (1 if num >= 0 else -1)
+                weights[row["bucket"]] = \
+                    weights.get(row["bucket"], 0) + delta
     finally:
         pairs.unpersist()
 

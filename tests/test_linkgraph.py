@@ -148,3 +148,79 @@ def test_hits_empty(spark):
     df = spark.createDataFrame([], "src_host string, dst_host string, "
                                    "n_links long")
     assert hits(df).count() == 0
+
+
+def _fixture_host_graph(spark):
+    """The host_pagerank / host_hits gate graph: host doc_id%20 links
+    to hosts (doc_id*7+k)%20, k=1..3, through the real link pipeline."""
+    def host_of(e):
+        return F.concat(F.lit("host"), (e % 20).cast("string"),
+                        F.lit(".example"))
+
+    page = spark.range(200).select(
+        F.concat(F.lit("https://"), host_of(F.col("id")),
+                 F.lit("/p"), F.col("id").cast("string")).alias("url"),
+        F.concat(*[F.concat(F.lit('<a href="https://'),
+                            host_of(F.col("id") * 7 + k),
+                            F.lit(f'/x{k}">l</a> '))
+                   for k in (1, 2, 3)]).alias("html_text"))
+    return host_edges(extract_links(page))
+
+
+def _seeded_dangling_graph(spark):
+    """60 nodes, ~1 in 5 with no out-links (dangling), 1-5 weighted
+    out-links each for the rest."""
+    import random
+
+    rng = random.Random(1234)
+    nodes = [f"n{i:02d}" for i in range(60)]
+    edges = []
+    for u in nodes:
+        if rng.random() < 0.2:
+            continue
+        for v in rng.sample([x for x in nodes if x != u], rng.randint(1, 5)):
+            edges.append((u, v, rng.randint(1, 4)))
+    # some link targets have no out-links of their own (dangling)
+    assert {v for _, v, _ in edges} - {u for u, _, _ in edges}
+    return spark.createDataFrame(edges, "src_host string, dst_host string, "
+                                        "n_links long")
+
+
+def _micro(df, cols):
+    """The gate's quantization: micro-units as longs."""
+    return sorted(tuple(r) for r in df.select(
+        "host", *[F.round(F.col(c) * 1e6, 0).cast("long") for c in cols]
+    ).collect())
+
+
+@pytest.mark.parametrize("graph", [_fixture_host_graph,
+                                   _seeded_dangling_graph])
+def test_rank_loops_layout_independent(spark, monkeypatch, graph):
+    """PageRank and HITS sum doubles across rows, so they may run under
+    operators.tuning.iteration_shuffles only while their quantized
+    outputs do not depend on the layout: as shipped (one shuffle
+    partition, AQE off inside the loop) vs with the scope removed, a
+    7-way shuffle and a 7-way split input."""
+    import contextlib
+
+    from docvault_ocr_service_spark.operators import linkgraph
+
+    edges = graph(spark).persist()
+
+    def run(e):
+        return (_micro(linkgraph.pagerank(e, iters=5), ["rank"]),
+                _micro(linkgraph.hits(e, iters=5), ["hub", "auth"]))
+
+    shipped = run(edges)
+    monkeypatch.setattr(linkgraph, "_iteration_shuffles",
+                        lambda *a: contextlib.nullcontext())
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        perturbed = run(edges.repartition(7))
+    finally:
+        spark.conf.set(key, prior)
+        edges.unpersist()
+    assert len(shipped[0]) == len(shipped[1]) > 0
+    assert perturbed == shipped
